@@ -20,6 +20,8 @@ disqus/pgshovel repository (see SURVEY.md "Provenance"). No code is
 copied from it — pgshovel is a Python CDC daemon, not a query engine.
 """
 
+# installs the zipimporter wrapper in every process that imports the package
+import pgshovel_spark.zipimport_cache  # noqa: F401
 from pgshovel_spark.session import get_session
 
 __all__ = ["get_session"]

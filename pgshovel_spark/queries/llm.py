@@ -168,7 +168,9 @@ def q_mm_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {
                     "doc_id": ids,
                     "sample_rate": rates,
-                    "duration_ms": (_AUD_N * 1000) // rates,
+                    "duration_ms": np.where(
+                        rates > 0, (_AUD_N * 1000) // np.maximum(rates, 1), 0
+                    ),
                     "peak": np.abs(d64).max(axis=1),
                     "rms": rms,
                     "zero_crossings": (

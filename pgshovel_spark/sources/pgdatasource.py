@@ -1629,6 +1629,20 @@ class PgUpsertStreamWriter(DataSourceStreamWriter):
     set ``two_phase=false`` to fall back to per-task autocommit,
     where the newer-guard alone provides replay idempotence).
 
+    Python worker calls per micro-batch: Spark runs this class in
+    reused Python workers three times per batch — the writer-planning
+    call (``write_into_data_source``), one ``write()`` task per
+    partition, and the driver-side ``commit()``
+    (``python_streaming_sink_runner``).  Each call first runs
+    ``importlib.invalidate_caches()``, which on CPython < 3.13 used to
+    re-read pyspark.zip's central directory once per imported pyspark
+    sub-package: ~0.1-0.25 s per call.  ``pgshovel_spark.zipimport_cache``
+    (installed by importing the package) skips unchanged archives, so
+    that setup costs ~0.2 ms per call once a worker has imported
+    pgshovel_spark; what remains per call is the worker round trip
+    and the work itself.  On a 4-core machine, ``addBatch`` p50 for
+    ~1,000-row batches went from ~450 ms to ~180 ms.
+
     Crash recovery (LIFECYCLE NOTE: Spark instantiates this writer
     fresh for every task AND every commit/abort call, so NOTHING here
     may sweep unconditionally — an init-time sweep would roll back

@@ -48,6 +48,7 @@ the same two-phase contract the JDBC incremental source documents.
 from __future__ import annotations
 
 import re
+import time
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -95,9 +96,26 @@ def create_slot(params: PgParams, slot: str) -> str:
         return row.rows[0][0]
 
 
+#: seconds ``drop_slot`` waits for the backend holding a slot to let go
+_DROP_WAIT_S = 10.0
+
+
 def drop_slot(params: PgParams, slot: str) -> None:
+    """Drop ``slot``.  The backend of a consumer that just stopped (a
+    peek or walsender session) can hold the slot a moment longer, so
+    wait — up to ``_DROP_WAIT_S`` — until ``pg_replication_slots``
+    shows it inactive.  A slot still active at the bound fails the
+    drop with the server's "active for PID" error, as before."""
+    slot = _check_slot(slot)
+    active = (
+        "select count(*) from pg_replication_slots"
+        f" where slot_name = '{slot}' and active"
+    )
+    deadline = time.monotonic() + _DROP_WAIT_S
     with params.connect() as c:
-        c.query(f"select pg_drop_replication_slot('{_check_slot(slot)}')")
+        while c.query(active)[0].rows[0][0] and time.monotonic() < deadline:
+            time.sleep(0.05)
+        c.query(f"select pg_drop_replication_slot('{slot}')")
 
 
 def advance(params: PgParams, slot: str, upto_lsn: str) -> None:

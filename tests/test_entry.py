@@ -5,6 +5,8 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
+import pytest
+
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entrymod
@@ -34,6 +36,20 @@ def test_session_ships_the_jit_alignment_config(spark):
     s = get_session("cfgtest")
     assert s.conf.get("spark.sql.codegen.hugeMethodLimit") == "8000"
     assert s.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_env_size_accepts_only_what_the_jvm_parses(monkeypatch):
+    """Spark's byte-size parser takes digits and a unit with nothing
+    between them; anything else must fail here, naming the variable."""
+    from pgshovel_spark.session import _env_size
+
+    for ok in ("256m", " 256m "):
+        monkeypatch.setenv("SPARK_GRAFT_MAX_PARTITION_BYTES", ok)
+        assert _env_size("SPARK_GRAFT_MAX_PARTITION_BYTES", default="1m") == "256m"
+    for bad in ("256 m", "12x"):
+        monkeypatch.setenv("SPARK_GRAFT_MAX_PARTITION_BYTES", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_MAX_PARTITION_BYTES"):
+            _env_size("SPARK_GRAFT_MAX_PARTITION_BYTES", default="1m")
 
 
 def test_survey_section2_matches_registry():

@@ -4502,6 +4502,44 @@ def test_sharded_bounded_multi_commit_stream_drain(spark, pg, tmp_path):
     pgl.drop_slot(pp, "shr_slot_mc")
 
 
+def test_drop_slot_waits_for_the_holding_backend(pg, monkeypatch):
+    """A consumer's backend can hold its slot a moment after the
+    consumer stopped: drop_slot waits for the release instead of
+    failing "active for PID", and still fails if the slot stays
+    active past its bound."""
+    from pgshovel_spark.sources import pgoutput as po
+
+    with pg.connect() as c:
+        c.query("create table dsw_t(id int primary key)")
+    po.create_publication(pg, "dsw_pub", ["dsw_t"])
+    for slot in ("dsw_slot", "dsw_slot2"):
+        po.create_slot_pgoutput(pg, slot)
+
+    rc = po.PgReplicationConnection(pg)
+    rc.start_replication("dsw_slot", "dsw_pub")
+    release = threading.Timer(0.5, rc.close)
+    release.start()
+    pgl.drop_slot(pg, "dsw_slot")
+    release.join(5)
+    assert not release.is_alive()
+
+    monkeypatch.setattr(pgl, "_DROP_WAIT_S", 0.3)
+    rc = po.PgReplicationConnection(pg)
+    rc.start_replication("dsw_slot2", "dsw_pub")
+    try:
+        with pytest.raises(PgError, match="active"):
+            pgl.drop_slot(pg, "dsw_slot2")
+    finally:
+        rc.close()
+    monkeypatch.undo()
+    pgl.drop_slot(pg, "dsw_slot2")
+    with pg.connect() as c:
+        assert not c.query(
+            "select 1 from pg_replication_slots"
+            " where slot_name in ('dsw_slot', 'dsw_slot2')"
+        )[0].rows
+
+
 def test_sharded_giant_commit_stream_restart_1m(spark, pg, tmp_path):
     """The verdict-bar drill: a single >=1M-row transaction on one
     shard, ``max_changes`` bounding EVERY batch, checkpoint
